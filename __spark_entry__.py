@@ -77,11 +77,8 @@ def _extracted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from go_readability_spark.spark.extract import route_and_extract
 
     # num_partitions: the input here is a COMPUTED frame (mapInPandas page
-    # synthesis), not a bucketed parquet scan — the no-shuffle two-branch
-    # union would re-run the whole synthesis once per branch.  The salted
-    # exchange routes megas and smalls in ONE scan of the synth output
-    # (extract.py route_and_extract docstring), and the shuffle it pays
-    # moves freshly-built spans that were never laid out on disk anyway.
+    # synthesis), not a bucketed parquet scan; the shuffle it pays moves
+    # freshly-built spans that were never laid out on disk anyway.
     return _session_cached(
         spark,
         sf_dir,
@@ -345,7 +342,7 @@ def _dedup_then_extract_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthesis or extraction.  The loser list (url_dedup_losers) is
     broadcast into a ``left_anti`` join against the raw text rows inside
     synthesize_documents — PLANS.md shows the BroadcastHashJoin LeftAnti —
-    then the survivors route through the same salted exchange + kernel as
+    then the survivors go through the same salted exchange + kernel as
     extract_articles."""
     from pyspark.sql import functions as F
 

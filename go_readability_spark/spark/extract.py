@@ -8,12 +8,11 @@ surrounding plan (scan, repartition, filters, aggregations, writes) stays
 entirely JVM-side for Catalyst/Tungsten to optimize.
 
 Scale notes (10^12-doc design point, SURVEY.md §4.2):
-- Memory is bounded per-worker by ``emit_every`` (output rows are yielded in
-  small chunks, independent of Arrow input batch size) plus the single
-  largest document — cap ``spark.sql.execution.arrow.maxRecordsPerBatch``
+- Memory is bounded per-worker by the output chunk bound in
+  ``_batch_extractor`` (output rows are yielded in small chunks, by count
+  and by input bytes, independent of Arrow input batch size) plus the
+  Arrow input batch — cap ``spark.sql.execution.arrow.maxRecordsPerBatch``
   so one mega-doc can't co-batch with hundreds of peers.
-- Skew: ``salted_repartition`` spreads documents uniformly regardless of
-  upstream partitioning (mega-docs cluster by crawl host in real corpora).
 - Oversized docs degrade to ``status='too_large'`` rows via
   ``max_elems_to_parse`` instead of stalling a task (readability.go:2176-2181).
 """
@@ -78,9 +77,17 @@ def extract_one(
     result, _article, status = parse_document(html or "", uri or DEFAULT_URI, options)
     if result is None:
         return {"doc_id": doc_id, "status": status, "error": None, **_EMPTY}
-    out_spans = [
-        s.as_row() for s in html_fragment_to_normalized_spans(result.html_content)
-    ]
+    try:
+        out_spans = [
+            s.as_row() for s in html_fragment_to_normalized_spans(result.html_content)
+        ]
+    except Exception as exc:  # one bad article is a row, never a failed task
+        return {
+            "doc_id": doc_id,
+            "status": "parse_error",
+            "error": f"{type(exc).__name__}: {str(exc)[:200]}",
+            **_EMPTY,
+        }
     return {
         "doc_id": doc_id,
         "spans": out_spans,
@@ -100,8 +107,8 @@ def extract_one(
 
 def _batch_extractor(
     options: Options,
-    emit_every: int,
-    emit_bytes: int = 8_000_000,
+    emit_every: int = 64,
+    emit_bytes: int = 1_000_000,
     prescreen: bool = False,
 ):
     cols = [f.name for f in ARTICLES_SCHEMA.fields]
@@ -113,16 +120,19 @@ def _batch_extractor(
             has_uri = "uri" in pdf.columns
             for row in pdf.itertuples(index=False):
                 uri = getattr(row, "uri", None) if has_uri else None
+                size = len(row.html or "")
+                # flush BEFORE parsing: a document that would take the
+                # buffer past emit_bytes runs with the buffer empty, and its
+                # row leaves before the next document runs — a mega-doc's
+                # parse never overlaps another large output row (input
+                # length is a safe upper proxy for output)
+                if out and (len(out) >= emit_every or out_sz + size >= emit_bytes):
+                    yield pd.DataFrame(out, columns=cols)
+                    out, out_sz = [], 0
                 out.append(
                     extract_one(row.doc_id, row.html, uri, options, prescreen)
                 )
-                # byte bound flushes early when a mega article lands in a
-                # mixed batch — the buffer never holds a mega plus dozens
-                # of peers (input length is a safe upper proxy for output)
-                out_sz += len(row.html or "")
-                if len(out) >= emit_every or out_sz >= emit_bytes:
-                    yield pd.DataFrame(out, columns=cols)
-                    out, out_sz = [], 0
+                out_sz += size
         if out:
             yield pd.DataFrame(out, columns=cols)
 
@@ -142,7 +152,6 @@ _HTML_EXPR = (
 def extract_articles(
     df: DataFrame,
     options: Options | None = None,
-    emit_every: int = 64,
     prescreen: bool = False,
 ) -> DataFrame:
     """documents(doc_id, spans[, uri]) → articles (ARTICLES_SCHEMA).
@@ -157,163 +166,36 @@ def extract_articles(
     if "uri" in df.columns:
         cols.append(F.col("uri"))
     return df.select(*cols).mapInPandas(
-        _batch_extractor(opts, emit_every, prescreen=prescreen),
+        _batch_extractor(opts, prescreen=prescreen),
         schema=ARTICLES_SCHEMA,
     )
-
-
-def with_doc_bytes(df: DataFrame) -> DataFrame:
-    """JVM-side document size (for skew routing / metrics) — no Python."""
-    return df.withColumn(
-        "doc_bytes",
-        F.expr(
-            "aggregate(spans, 0L, (acc, s) -> acc + coalesce(length(s.text), 0L))"
-        ),
-    )
-
-
-def with_doc_stats(df: DataFrame) -> DataFrame:
-    """JVM-side document size AND markup density in ONE pass over the span
-    texts — no Python.  ``doc_tags`` counts ``<`` occurrences, a cheap
-    upper proxy for DOM node count: kernel worker MEMORY scales with node
-    count, not bytes (an element-dense 3.2 MB page measured 1.4 GB RSS),
-    so density must route one-per-task exactly like byte-size does.  The
-    struct accumulator is referenced twice downstream, which blocks
-    CollapseProject from inlining the aggregate per consumer (CLAUDE.md
-    trap note)."""
-    stats = df.withColumn(
-        "_doc_stats",
-        F.expr(
-            "aggregate(spans, named_struct('b', 0L, 't', 0L), (acc, s) ->"
-            " named_struct("
-            "'b', acc.b + coalesce(length(s.text), 0L),"
-            "'t', acc.t + coalesce("
-            "length(s.text) - length(replace(s.text, '<', '')), 0L)))"
-        ),
-    )
-    return (
-        stats.withColumn("doc_bytes", F.col("_doc_stats.b"))
-        .withColumn("doc_tags", F.col("_doc_stats.t"))
-        .drop("_doc_stats")
-    )
-
-
-def _doc_bytes_expr():
-    return F.expr("aggregate(spans, 0L, (acc, s) -> acc + coalesce(length(s.text), 0L))")
-
-
-def _doc_tags_expr():
-    return F.expr(
-        "aggregate(spans, 0L, (acc, s) -> acc +"
-        " coalesce(length(s.text) - length(replace(s.text, '<', '')), 0L))"
-    )
-
-
-def salted_repartition(
-    df: DataFrame, num_partitions: int, salt_buckets: int = 64
-) -> DataFrame:
-    """Uniform spread of documents across tasks regardless of key skew.
-
-    ``xxhash64(doc_id, salt)`` decorrelates from any upstream partitioning
-    (e.g. crawl-host clustering); with one shuffle we get even task sizes,
-    which is what keeps scaling efficiency ≥0.8 when executor count grows
-    (stragglers are the enemy, BASELINE.md north_rule).
-
-    The repartition key is the RAW 64-bit hash, never ``pmod(hash, N)``:
-    pre-modding to N distinct values and re-hashing them through the
-    shuffle's murmur3 % N is balls-in-bins — ~37% of partitions land
-    empty and the busiest carries 3-4 salt cells (measured), exactly the
-    straggler shape salting exists to prevent.  A high-cardinality key
-    spreads by law of large numbers instead.
-    """
-    salted = df.withColumn(
-        "_salt", F.xxhash64(F.col("doc_id"), F.lit(salt_buckets))
-    )
-    return salted.repartition(num_partitions, F.col("_salt")).drop("_salt")
 
 
 def route_and_extract(
     df: DataFrame,
     options: Options | None = None,
-    mega_doc_bytes: int = 4_000_000,
-    num_partitions: int | None = None,
-    mega_partitions: int = 256,
     prescreen: bool = False,
-    mega_doc_tags: int = 100_000,
+    num_partitions: int | None = None,
 ) -> DataFrame:
-    """Size-routed extraction: mega-docs take a dedicated fine-grained pass.
-
-    Documents larger than ``mega_doc_bytes`` OR denser than
-    ``mega_doc_tags`` markup openers are repartitioned one-per-task so a
-    single 100 MB page can neither co-batch with peers (Arrow memory) nor
-    straggle a fat partition (SURVEY.md §7 hard parts).  The density arm
-    exists because kernel memory scales with NODE COUNT, not bytes: an
-    element-dense 3.2 MB page (400k inline elements) measured 1.4 GB of
-    worker RSS — co-batching a few of those OOMs an executor that the
-    byte threshold alone would happily co-batch.  Both branches are the
-    same operator — ``unionByName`` recombines.
+    """One scan → one ``mapInPandas`` extraction, optionally after one
+    salted shuffle.
 
     ``num_partitions``: pass it ONLY when the input layout is skewed or
-    under-split — it inserts a salted full-corpus shuffle, which measured
-    ~40% of job wall on a well-bucketed corpus (local[16]: 3890 vs 2637
-    docs/s without/with).  The production corpus is bucketed at write time
-    (Iceberg ``bucket(B, doc_id)``), so the normal path reads in place and
-    shuffles nothing.
+    under-split (a computed frame, one small file, host-clustered crawl
+    dumps) — it inserts a salted full-corpus shuffle, which measured ~40%
+    of job wall on a well-bucketed corpus (local[16]: 3890 vs 2637 docs/s
+    without/with).  The production corpus is bucketed at write time, so
+    the normal path reads in place and shuffles nothing.
 
-    Scan count: a two-branch filter split naively re-scans the corpus
-    (2× read amplification for a ~1/500 mega fraction).  Avoided two ways:
-    - With ``num_partitions`` the job already pays one full-corpus
-      exchange, so routing happens INSIDE it: the salt expression gives
-      megas doc_id-resolution salts (each mega lands in an independently
-      random partition, never clustered) and one extraction pass covers
-      everything — one scan, one shuffle, no union.  (Exchange reuse
-      across a two-branch union does not work here: Python map nodes
-      don't canonicalize equal, verified on the executed plan.)
-    - Without it, the dedicated mega pass remains, but pass an input that
-      already carries ``doc_bytes`` AND ``doc_tags`` (materialize both at
-      ingest and cluster/sort files by them — each branch's filter then
-      prunes at the parquet row-group level and each byte is read once).
-      If both are absent they are computed here in one fused pass
-      (``with_doc_stats``); if exactly one is present (the pre-density
-      contract materialized only ``doc_bytes``) it is REUSED — keeping
-      its row-group pruning — and only the missing stat is computed.
-      Either way only the numeric columns are evaluated per branch,
-      never the reassembled HTML.
+    The repartition key is the RAW 64-bit hash ``xxhash64(doc_id, 64)``,
+    never ``pmod(hash, N)``: pre-modding to N distinct values and
+    re-hashing them through the shuffle's murmur3 % N is balls-in-bins —
+    ~37% of partitions land empty and the busiest carries 3-4 salt cells
+    (measured), exactly the straggler shape salting exists to prevent.  A
+    high-cardinality key spreads by law of large numbers instead; the
+    salt literal decorrelates it from the checkpoint bucket hash
+    ``xxhash64(doc_id)`` and from any upstream partitioning.
     """
-    have_bytes = "doc_bytes" in df.columns
-    have_tags = "doc_tags" in df.columns
-    if have_bytes and have_tags:
-        sized = df
-    elif have_bytes:
-        # caller pre-materialized doc_bytes under the pre-density contract:
-        # keep its row-group-pruning value, compute only the missing stat
-        sized = df.withColumn("doc_tags", _doc_tags_expr())
-    elif have_tags:
-        sized = df.withColumn("doc_bytes", _doc_bytes_expr())
-    else:
-        sized = with_doc_stats(df)
-    is_mega = (F.col("doc_bytes") > mega_doc_bytes) | (
-        F.col("doc_tags") > mega_doc_tags
-    )
     if num_partitions:
-        # raw high-cardinality salt, not pmod(hash, N): see
-        # salted_repartition's balls-in-bins note
-        salt = F.when(
-            is_mega, F.concat(F.lit("m"), F.col("doc_id").cast("string"))
-        ).otherwise(F.xxhash64(F.col("doc_id"), F.lit(64)).cast("string"))
-        routed = (
-            sized.withColumn("_salt", salt)
-            .repartition(num_partitions, F.col("_salt"))
-            .drop("_salt", "doc_bytes", "doc_tags")
-        )
-        return extract_articles(routed, options, prescreen=prescreen)
-    small = sized.filter(~is_mega).drop("doc_bytes", "doc_tags")
-    mega = sized.filter(is_mega).drop("doc_bytes", "doc_tags")
-    # Arrow input batches are cut per partition, so worker memory for the
-    # mega branch = (megas co-resident in one partition) × doc size.  Hash
-    # megas across many partitions (empty tasks cost ~ms) so a batch almost
-    # always holds ONE mega-doc — emit_every bounds only the output side.
-    mega = mega.repartition(mega_partitions, F.col("doc_id"))
-    return extract_articles(small, options, prescreen=prescreen).unionByName(
-        extract_articles(mega, options, emit_every=1, prescreen=prescreen)
-    )
+        df = df.repartition(num_partitions, F.xxhash64(F.col("doc_id"), F.lit(64)))
+    return extract_articles(df, options, prescreen=prescreen)

@@ -27,7 +27,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..kernel.options import Options
-from .extract import route_and_extract, salted_repartition
+from .extract import route_and_extract
 from .schema import LINEAGE_SCHEMA, METRICS_SCHEMA
 
 
@@ -43,8 +43,12 @@ def _ensure_dynamic_overwrite(spark: SparkSession) -> None:
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
-    """Deterministic checkpoint bucket — same function the Iceberg partition
-    transform would use, so partition pruning on resume is exact."""
+    """Deterministic checkpoint bucket ``pmod(xxhash64(doc_id), B)``.
+
+    This is NOT the Iceberg ``bucket`` transform, which is 32-bit Murmur3
+    (x86, seed 0), ``(murmur3(v) & Integer.MAX_VALUE) % B``.  Resume filters on this column, so
+    pruning on a real Iceberg table partitioned by ``bucket(B, doc_id)``
+    does not follow from this function."""
     return df.withColumn(
         "bucket_id",
         F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"),
@@ -128,12 +132,12 @@ def run_extraction(
         started_at = F.lit(datetime.datetime.now(datetime.timezone.utc)).cast(
             "timestamp"
         )
-        subset = bucketed.filter(F.col("bucket_id").isin(wave))
-        if num_partitions:
-            subset = salted_repartition(subset, num_partitions)
+        subset = bucketed.filter(F.col("bucket_id").isin(wave)).drop("bucket_id")
         t_wave = time.time()
         extracted = with_bucket(
-            route_and_extract(subset.drop("bucket_id"), options, prescreen=prescreen),
+            route_and_extract(
+                subset, options, prescreen=prescreen, num_partitions=num_partitions
+            ),
             n_buckets,
         )
         # Dynamic partition overwrite: re-running a failed wave replaces

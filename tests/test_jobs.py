@@ -53,8 +53,9 @@ def test_extract_job_end_to_end(spark):
 
 
 def test_mega_doc_routes_and_extracts(spark):
-    """A ~12 MB document flows through the mega branch without blowing
-    batch memory and still extracts (or degrades to a status row)."""
+    """Two ~7 MB documents and a small one share one partition, so the
+    megas co-batch in one Arrow batch on the single extraction path, and
+    all three still extract."""
     from go_readability_spark.codec.spans import html_to_spans
     from go_readability_spark.spark.extract import route_and_extract
     from go_readability_spark.spark.schema import DOCUMENTS_SCHEMA
@@ -62,18 +63,20 @@ def test_mega_doc_routes_and_extracts(spark):
     para = "<p>" + "mega document body text with plenty of words. " * 40 + "</p>\n"
     html = "<html><body><article>" + para * 4000 + "</article></body></html>"
     assert len(html) > 7_000_000
+    mega_spans = [s.as_row() for s in html_to_spans(html)]
     rows = [
-        {"doc_id": "mega-1", "uri": None,
-         "spans": [s.as_row() for s in html_to_spans(html)]},
+        {"doc_id": "mega-1", "uri": None, "spans": mega_spans},
         {"doc_id": "small-1", "uri": None,
          "spans": [{"kind": "markup", "text": "<html><body><article>" + para * 20 + "</article></body></html>",
                     "media_ref": "", "offset": 0}]},
+        {"doc_id": "mega-2", "uri": None, "spans": mega_spans},
     ]
-    docs = spark.createDataFrame(rows, schema=DOCUMENTS_SCHEMA)
-    out = {r.doc_id: r for r in route_and_extract(docs, mega_doc_bytes=4_000_000).collect()}
-    assert set(out) == {"mega-1", "small-1"}
+    docs = spark.createDataFrame(rows, schema=DOCUMENTS_SCHEMA).coalesce(1)
+    out = {r.doc_id: r for r in route_and_extract(docs).collect()}
+    assert set(out) == {"mega-1", "mega-2", "small-1"}
     assert out["small-1"].status == "ok"
-    assert out["mega-1"].status == "ok" and out["mega-1"].length > 1_000_000
+    assert out["mega-1"].status == out["mega-2"].status == "ok"
+    assert out["mega-1"].length == out["mega-2"].length > 1_000_000
 
 
 def test_hygiene_job_end_to_end():

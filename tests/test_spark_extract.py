@@ -3,16 +3,18 @@ pure-Python kernel's golden results through the full codec round-trip
 (FIXTURES.md §2: span-sequence equality (kind, text, media_ref, order))."""
 
 import os
+import re
 
+import pandas as pd
 import pytest
 
 from go_readability_spark.codec.spans import html_fragment_to_normalized_spans
-from go_readability_spark.spark.corpus import FIXTURES_DIR, fixture_documents
+from go_readability_spark.kernel.options import Options
+from go_readability_spark.spark.corpus import FIXTURES_DIR, fixture_documents, synth_html
 from go_readability_spark.spark.extract import (
+    _batch_extractor,
     extract_articles,
     route_and_extract,
-    with_doc_bytes,
-    with_doc_stats,
 )
 
 # A diverse probe subset (full 119-fixture parity is covered Spark-free by
@@ -66,63 +68,117 @@ def test_media_refs_absolutized(fixture_articles):
     assert imgs and all(s.media_ref.startswith("http") for s in imgs)
 
 
-def test_emit_chunking_preserves_rows(spark):
-    docs = fixture_documents(spark).limit(10)
-    small = extract_articles(docs, emit_every=1).count()
-    big = extract_articles(docs, emit_every=1000).count()
-    assert small == big == 10
+_WORDS = (
+    "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu xi"
+    " omicron pi rho sigma tau upsilon"
+).split()
 
 
-def test_with_doc_bytes_matches_python(spark):
-    docs = fixture_documents(spark).limit(5)
-    rows = with_doc_bytes(docs).collect()
-    for r in rows:
-        assert r.doc_bytes == sum(len(s.text or "") for s in r.spans)
+def _synth_pages(n: int, poison: int | None = None) -> list[tuple[str, str]]:
+    """(doc_id, html) article pages from ``synth_html``; the page numbered
+    ``poison`` carries the word ``poison`` in its body."""
+    pages = []
+    for i in range(n):
+        words = [_WORDS[(i + j) % len(_WORDS)] for j in range(80)]
+        if i == poison:
+            words[10] = "poison"
+        pages.append((f"s{i}", synth_html(i, " ".join(words), "en", "web")))
+    return pages
 
 
-def test_route_and_extract_covers_both_branches(spark):
-    docs = fixture_documents(spark).limit(20)
-    # threshold small enough that some fixtures route through the mega branch
-    out = route_and_extract(docs, mega_doc_bytes=50_000, num_partitions=4)
-    rows = out.collect()
-    assert len(rows) == 20
-    assert {r.doc_id for r in rows} == {r.doc_id for r in docs.select("doc_id").collect()}
+def _run_batches(pages, batch_rows: int, **kw) -> tuple[list[dict], list[list[str]]]:
+    """Drive the worker-side extractor over pandas batches, as mapInPandas
+    does → (output rows in order, doc_ids of each output chunk)."""
+    batches = [
+        pd.DataFrame(pages[i : i + batch_rows], columns=["doc_id", "html"])
+        for i in range(0, len(pages), batch_rows)
+    ]
+    fn = _batch_extractor(Options(classes_to_preserve=["page", "caption"]), **kw)
+    chunks = list(fn(iter(batches)))
+    return [r for c in chunks for r in c.to_dict("records")], [list(c.doc_id) for c in chunks]
 
 
-def test_with_doc_stats_matches_python(spark):
-    docs = fixture_documents(spark).limit(5)
-    for r in with_doc_stats(docs).collect():
-        assert r.doc_bytes == sum(len(s.text or "") for s in r.spans)
-        assert r.doc_tags == sum((s.text or "").count("<") for s in r.spans)
+def test_emit_chunking_preserves_rows():
+    pages = _synth_pages(10)
+    small, chunks_small = _run_batches(pages, 4, emit_every=1)
+    big, chunks_big = _run_batches(pages, 4, emit_every=1000)
+    assert (len(chunks_small), len(chunks_big)) == (10, 1)
+    assert [r["doc_id"] for r in small] == [d for d, _ in pages]
+    assert all(r["status"] == "ok" for r in small)
+    assert small == big
 
 
-def test_partial_doc_stats_are_reused_not_recomputed(spark):
-    """A caller that pre-materialized only doc_bytes (the pre-density
-    contract) must keep that column — route_and_extract computes only the
-    missing doc_tags, so the fused two-stat aggregate (named_struct) never
-    appears in the plan and results are unchanged."""
-    docs = fixture_documents(spark).limit(6)
-    base = {r.doc_id: (r.status, r.length) for r in route_and_extract(docs).collect()}
-    pre = with_doc_bytes(docs)
-    routed_df = route_and_extract(pre, mega_doc_bytes=50_000)
-    plan = routed_df._jdf.queryExecution().executedPlan().toString()
-    assert "named_struct" not in plan  # fused recompute path not taken
-    routed = {r.doc_id: (r.status, r.length) for r in routed_df.collect()}
-    assert routed == base
+def test_emit_byte_bound_isolates_a_large_document():
+    """A document that would take the output buffer past the byte bound
+    is parsed with the buffer flushed, and its row leaves alone."""
+    pages = _synth_pages(6)
+    large = synth_html(499, " ".join(_WORDS * 4), "en", "web")  # rep=64 page
+    pages.insert(3, ("large", large))
+    bound = len(large)
+    assert bound > 4 * max(len(h) for d, h in pages if d != "large")
+    rows, chunks = _run_batches(pages, 4, emit_every=1000, emit_bytes=bound)
+    assert ["large"] in chunks
+    assert [r["doc_id"] for r in rows] == [d for d, _ in pages]
+    assert rows == _run_batches(pages, 4, emit_every=1)[0]
 
 
-def test_dense_doc_routes_through_density_arm(spark):
-    """A small-bytes, element-dense doc must take the mega route (kernel
-    memory scales with node count, not bytes) and still extract exactly:
-    with mega_doc_tags low enough, the dense doc is the ONLY row in the
-    mega branch and the result set is unchanged."""
-    docs = fixture_documents(spark).limit(6)
-    base = {r.doc_id: (r.status, r.length) for r in route_and_extract(docs).collect()}
-    routed = {
-        r.doc_id: (r.status, r.length)
-        for r in route_and_extract(docs, mega_doc_tags=500).collect()
-    }
-    assert routed == base  # density routing changes placement, never results
+def test_codec_raise_becomes_one_parse_error_row(monkeypatch):
+    """A raise in the output span codec fails only its own document: it
+    comes out as one parse_error row with the exception as the reason, and
+    its batch neighbours still extract."""
+    import go_readability_spark.spark.extract as X
+
+    real = X.html_fragment_to_normalized_spans
+    msg = "codec broke " + "x" * 300
+
+    def flaky(html):
+        if "poison" in html:
+            raise ValueError(msg)
+        return real(html)
+
+    monkeypatch.setattr(X, "html_fragment_to_normalized_spans", flaky)
+    rows, _ = _run_batches(_synth_pages(3, poison=1), 3)
+    assert [r["doc_id"] for r in rows] == ["s0", "s1", "s2"]
+    bad = rows[1]
+    assert bad["status"] == "parse_error"
+    assert bad["error"] == f"ValueError: {msg[:200]}"
+    assert bad["spans"] is None and bad["text_content"] is None
+    assert rows[0]["status"] == rows[2]["status"] == "ok"
+    assert rows[0]["error"] is None and rows[0]["spans"]
+
+
+def _final_plan(df) -> str:
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()  # the final plan only, not the initial one
+    return plan.toString()
+
+
+def test_route_and_extract_is_one_scan_one_path(spark, tmp_path):
+    """One extraction path: one parquet scan, no union, and a single
+    exchange only when ``num_partitions`` asks for the salted shuffle;
+    every document comes out exactly once."""
+    from go_readability_spark.codec.spans import html_to_spans
+    from go_readability_spark.spark.schema import DOCUMENTS_SCHEMA
+
+    pages = _synth_pages(24)
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [
+            {"doc_id": d, "uri": None, "spans": [s.as_row() for s in html_to_spans(h)]}
+            for d, h in pages
+        ],
+        schema=DOCUMENTS_SCHEMA,
+    ).repartition(3).write.parquet(path)
+    docs = spark.read.parquet(path)
+    for num_partitions, exchanges in ((None, 0), (4, 1)):
+        out = route_and_extract(docs, num_partitions=num_partitions)
+        ids = sorted(r.doc_id for r in out.collect())
+        plan = _final_plan(out)
+        assert plan.count("FileScan parquet") == 1, plan
+        assert "Union" not in plan, plan
+        assert len(re.findall(r"\bExchange\b", plan)) == exchanges, plan
+        assert ids == sorted(d for d, _ in pages)
 
 
 def test_malformed_spans_become_error_rows(spark):

@@ -50,8 +50,7 @@ walls, steals, n = [], [], 0
 for _ in range(repeats):
     t0 = time.time()
     # the corpus is pre-bucketed at write time (the Iceberg bucket(B,
-    # doc_id) layout) so extraction reads in place — no shuffle; mega-docs
-    # still take the fine-grained route inside route_and_extract
+    # doc_id) layout) so extraction reads in place — no shuffle
     n, st = steal_pct_window(lambda: route_and_extract(docs).count())
     walls.append(round(time.time() - t0, 1)); steals.append(st)
 # min wall = the least hypervisor-stolen run (this VM shows 0-6%+ CPU steal;
